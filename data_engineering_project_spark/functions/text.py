@@ -76,19 +76,6 @@ def _intersect_hits(lowered: Column, lang: str) -> Column:
     return F.size(F.array_intersect(lowered, sw))
 
 
-def stopword_hits(text: Column | str, lang: str) -> Column:
-    """Count of DISTINCT stopword tokens present, for one language."""
-    return _intersect_hits(F.transform(tokens(text), F.lower), lang)
-
-
-def stopword_hits_from_tokens(toks: Column, lang: str) -> Column:
-    """Same, over a pre-tokenized array column — callers scoring several
-    languages should tokenize ONCE into a column first (the split would
-    otherwise be recomputed per language per row; Catalyst does not CSE
-    across when() branches)."""
-    return _intersect_hits(F.transform(toks, F.lower), lang)
-
-
 def lang_guess_from_tokens(toks: Column) -> Column:
     """Pick the language whose stopword list hits most (ties → 'und').
 
@@ -104,13 +91,6 @@ def lang_guess_from_tokens(toks: Column) -> Column:
     for lang in reversed(list(STOPWORDS)):
         expr = F.when((hits[lang] == best) & (best > 0), lang).otherwise(expr)
     return expr
-
-
-def lang_guess(text: Column | str) -> Column:
-    """Language ID from raw text (tokenizes inline — prefer
-    :func:`lang_guess_from_tokens` over a materialized token column when
-    scoring at scale)."""
-    return lang_guess_from_tokens(tokens(text))
 
 
 def with_lang_guess(df, text_col: str, out_col: str = "guessed_lang"):

@@ -48,7 +48,7 @@ def _cents_dir(path: str) -> str:
 # two collect jobs PER MICRO-BATCH for bytes the driver already held.
 # build_index invalidates on overwrite; an external writer that
 # rewrites the sidecar outside this module's API must clear the cache
-# (the same immutability assumption workload.load() documents).
+# (the same immutability assumption sources.parquet.load() documents).
 _CENT_ROWS_CACHE: dict[tuple[str, str], list] = {}
 
 

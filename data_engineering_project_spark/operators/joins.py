@@ -16,12 +16,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dim_join(fact: DataFrame, dim: DataFrame, key: str | list[str]) -> DataFrame:
-    """Inner fact⋈dim with a broadcast hint (J2/J3: dims are always the
-    small side of a star join)."""
-    return fact.join(F.broadcast(dim), key, "inner")
-
-
 def anti_join(
     left: DataFrame,
     right: DataFrame,

@@ -78,13 +78,13 @@ def blocked_edit_pairs(
     only within blocks of the distinct-name dictionary.
 
     ``max_block_names`` is the fail-loudly guard (same contract as
-    workload._stage_stream_source): when set, the :func:`block_profile`
-    census runs first (one extra small pre-flight job over the
-    dictionary — deliberate: failing BEFORE the pair join is the whole
-    point) and raises :class:`BlockSizeExceeded` naming the offending
-    keys if ANY block holds more than that many distinct names — a
-    degenerate key (empty string, constant prefix …) must abort the
-    job, not silently schedule a quadratic task."""
+    ``max_block_rows`` in similarity.embedding_near_dups): when set,
+    the :func:`block_profile` census runs first (one extra small
+    pre-flight job over the dictionary — deliberate: failing BEFORE the
+    pair join is the whole point) and raises :class:`BlockSizeExceeded`
+    naming the offending keys if ANY block holds more than that many
+    distinct names — a degenerate key (empty string, constant prefix …)
+    must abort the job, not silently schedule a quadratic task."""
     if max_block_names is not None:
         over = (
             block_profile(df, name_col, block)

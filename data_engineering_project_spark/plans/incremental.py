@@ -177,22 +177,26 @@ def dq_check(df: DataFrame, key_cols: list[str], non_negative: list[str]) -> dic
 
 def append_new_orders(
     spark: SparkSession, bronze_orders_dir: str, incoming: DataFrame, spec: IncrementalSpec
-) -> int:
+) -> tuple[DataFrame, int]:
     """Row-level exactly-once append of orders (I2/J5):
-    NOT EXISTS staging → append (scripts/bronze_incremental.py:274-289)."""
+    NOT EXISTS staging → append (scripts/bronze_incremental.py:274-289).
+    Returns the staged new orders (they scope the items append) and
+    their count."""
     if os.path.exists(bronze_orders_dir):
         existing_keys = spark.read.parquet(bronze_orders_dir).select(spec.order_key)
         fresh = anti_join(incoming, existing_keys, [spec.order_key])
     else:
         fresh = incoming
     # Stage before writing (the reference's TEMP TABLE, S10): appending to
-    # bronze refreshes any plan that scans it, so without cutting lineage
-    # the anti-join would re-evaluate against its own output and vanish.
+    # bronze refreshes any plan that scans it, so the anti-join must be
+    # materialized with its lineage cut first or it would re-evaluate
+    # against its own output and vanish — a cache() is NOT enough (the
+    # path refresh invalidates it too).
     fresh = fresh.localCheckpoint(eager=True)
     n = fresh.count()
     if n:
         fresh.write.mode("append").parquet(bronze_orders_dir)
-    return n
+    return fresh, n
 
 
 def append_new_items(
@@ -301,19 +305,7 @@ def run_incremental(
             results[fname] = {"rows_in": 0, "orders_inserted": 0, "items_inserted": 0}
             continue
         stats = dq_check(batch, [spec.order_key], [])
-        if os.path.exists(orders_dir):
-            existing_keys = spark.read.parquet(orders_dir).select(spec.order_key)
-            fresh = anti_join(batch, existing_keys, [spec.order_key])
-        else:
-            fresh = batch
-        # Stage new orders (TEMP TABLE equivalent, S10): the append below
-        # refreshes plans scanning orders_dir, so the anti-join must be
-        # materialized with its lineage cut first — a cache() is NOT
-        # enough (the path refresh invalidates it too).
-        fresh = fresh.localCheckpoint(eager=True)
-        n_orders = fresh.count()
-        if n_orders:
-            fresh.write.mode("append").parquet(orders_dir)
+        fresh, n_orders = append_new_orders(spark, orders_dir, batch, spec)
         n_items = append_new_items(spark, items_dir, items_source, fresh, spec)
         _log_ledger(
             spark, ledger, fname, fp, stats["rows_in"], n_orders, "OK",

@@ -32,10 +32,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_project_spark.functions import day_name, delivery_days
+from data_engineering_project_spark.sources.parquet import load
 
 
 @dataclass(frozen=True)
@@ -209,3 +210,14 @@ def build_star_schema(
         "dim_time": gold_dim_time(orders_s),
         "fact_sales": gold_fact_sales(orders_s, items_s, spec),
     }
+
+
+def gold(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Build the gold star schema lazily from the testdata tables."""
+    return build_star_schema(
+        orders_raw=load(spark, sf_dir, "orders"),
+        items_raw=load(spark, sf_dir, "lineitem"),
+        customers_raw=load(spark, sf_dir, "customer"),
+        products_raw=load(spark, sf_dir, "part"),
+        spec=TESTDATA_SPEC,
+    )

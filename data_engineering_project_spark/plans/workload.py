@@ -51,8 +51,8 @@ from data_engineering_project_spark.operators import pq as pq_ops
 from data_engineering_project_spark.operators.asof import asof_join
 from data_engineering_project_spark.operators.joins import anti_join, semi_join
 from data_engineering_project_spark.plans import analytics
-from data_engineering_project_spark.plans.medallion import TESTDATA_SPEC, build_star_schema
-from data_engineering_project_spark.sources.parquet import read_testdata
+from data_engineering_project_spark.plans.medallion import gold
+from data_engineering_project_spark.sources.parquet import _ensure_session_confs, load
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -70,56 +70,12 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-_CONFS_PINNED: set[str] = set()
-
-
-def _ensure_session_confs(spark: SparkSession) -> None:
-    """Queries may run in a session WE did not build (the driver's
-    harness constructs its own SparkSession): pin the runtime-settable
-    confs our semantics depend on — nanos-parquet reads (events table)
-    and UTC time semantics (dayname/period vs the DuckDB oracle).
-    Pinned once per application (r14): each conf.set is a py4j round
-    trip, and this runs on EVERY load() call (~540 sites per sweep)."""
-    app = spark.sparkContext.applicationId
-    if app in _CONFS_PINNED:
-        return
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    _CONFS_PINNED.add(app)
-
-
-# Session-memoized base-table RELATIONS (r13, guide §7.3): every
-# `spark.read.parquet(path)` call costs ~100 ms of single-threaded
-# driver work (file listing + footer schema inference) before any
-# action runs, and the registry's ~540 load() calls paid it per call
-# for immutable inputs. Memoizing the LAZY frame is plan reuse, not
-# result caching — every action still scans the parquet files; only
-# the relation construction (schema/footer) is shared, exactly what
-# `spark.table` does through a catalog entry on a real lake.
-_TABLE_FRAMES: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """IMMUTABILITY ASSUMPTION (ADVICE r13): the memoized relation
-    snapshots the table's file listing + schema at first load; a
-    harness that rewrites an input dir mid-session must call
-    ``_TABLE_FRAMES.clear()`` (or use a fresh SparkSession) or the
-    cached frame will reference stale/deleted files."""
-    _ensure_session_confs(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    df = _TABLE_FRAMES.get(key)
-    if df is None:
-        df = read_testdata(spark, sf_dir, table)
-        _TABLE_FRAMES[key] = df
-    return df
-
-
 # Deterministic intermediate frames shared ACROSS queries in one
-# session (the bench loop and the driver both run the registry in a
-# single SparkSession): the 3-gram shingle frame and the LSH candidate
-# sets are rebuilt identically by every query in the dedup family
-# (tokenize+NGram is the family's most expensive map stage), and the
-# co-purchase pair-counts frame feeds the whole graph family. Each
+# session (a registry sweep runs every entry in one SparkSession): the
+# 3-gram shingle frame and the LSH candidate sets are rebuilt
+# identically by every query in the dedup family (tokenize+NGram is
+# the family's most expensive map stage), and the co-purchase
+# pair-counts frame feeds the whole graph family. Each
 # entry is localCheckpoint'ed once per (session, sf_dir) and reused —
 # pure caching of a deterministic frame, so query OUTPUTS are
 # bit-identical with and without the cache. At lake scale this is the
@@ -174,17 +130,6 @@ def _copurchase_pair_counts(spark, sf_dir) -> DataFrame:
         )
 
     return _shared_frame(spark, sf_dir, "copurchase_pair_counts", build)
-
-
-def gold(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Build the gold star schema lazily from the testdata tables."""
-    return build_star_schema(
-        orders_raw=load(spark, sf_dir, "orders"),
-        items_raw=load(spark, sf_dir, "lineitem"),
-        customers_raw=load(spark, sf_dir, "customer"),
-        products_raw=load(spark, sf_dir, "part"),
-        spec=TESTDATA_SPEC,
-    )
 
 
 # The silver+gold pipeline as a DuckDB CTE prefix — the oracle-side twin
@@ -875,8 +820,9 @@ def _stream_drain_partitions(spark):
     session-global ``spark.sql.shuffle.partitions`` for the drain's
     duration, so any query PLANNED concurrently from another thread
     silently inherits the reduced count. The registry runs entries
-    sequentially (bench.py and the driver both do); a threaded harness
-    should scope the drain via ``spark.newSession()`` instead."""
+    sequentially (scripts_driver_sim.py and the tests both do); a
+    threaded harness should scope the drain via ``spark.newSession()``
+    instead."""
     import os as _os
 
     n = _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
@@ -6546,8 +6492,8 @@ def _ann_index_path(spark, sf_dir) -> str:
 
 def _ann_index_path_near_dups(spark, sf_dir) -> str:
     """Index for the PQ near-dup loop with nlist SCALED to the corpus —
-    ``max(16, n_vec // 1000)``, the same rule the ×100 probe's ANN
-    substitution uses (scripts_x100_probe). A fixed 16-cell quantizer
+    ``max(16, n_vec // 1000)``, the same rule as the ×100 scaling
+    rung's ANN substitution (SCALING_X100.json). A fixed 16-cell quantizer
     makes probed-cell population grow linearly with the corpus while
     the probing batch also grows, so the ADC rank stage's candidate
     count grows QUADRATICALLY — the r12 verdict's one weak component
@@ -18358,328 +18304,22 @@ def q_dynamic_partition_pruning_join(
     )
 
 
-# ---------------------------------------------------------------------------
-# Driver-window rotation (mechanical).
-#
-# The driver oracle-checks only the FIRST 50 entries of queries() per
-# round, so names that already earned a green CORRECTNESS row rotate to
-# the back and the still-unchecked tail moves into the checked window;
-# across rounds every oracle-backed query accumulates a driver row.
-#
-# Rounds 1-6 maintained the proven set as hand-copied tuples, and three
-# successive judge verdicts flagged the same failure mode: forgetting
-# the round-open rotation wastes an entire 50-row driver window
-# re-proving already-proven names.  The proven set is now DERIVED from
-# the committed driver artifacts themselves (CORRECTNESS_r*.json at the
-# repo root): a name is proven iff some artifact records all three
-# checks green (rows_match, schema_match, hash_match) for it, in a
-# round no earlier than the round its body was last rewired (_REWIRED
-# below).  A stale window is structurally impossible -- the moment the
-# driver commits a new artifact, the next queries() call reschedules
-# around it.
-
-import json as _json
-import re as _re
-from pathlib import Path as _Path
-
-# Body/oracle rewires: a green row only attests the body that earned
-# it.  name -> round in which the body (or oracle) last materially
-# changed.  Artifact rows from EARLIER rounds are stale for that name
-# (the driver runs at round end, so a row from the SAME round already
-# attests the rewritten body).  Names here with no later green row
-# queue in the window's reverify band (behind never-proven, ahead of
-# attested).
-_REWIRED: dict[str, int] = {
-    # round 6: rewired onto operators/order_stats two-phase global
-    # ranks (oracles unchanged, outputs sim-verified hash-identical at
-    # sf0.01, but their r03/r05 badges attest the old single-partition
-    # window bodies)
-    "order_value_deciles": 6,
-    # round 7: three chained global_ntile passes batched into the
-    # concurrent global_ntile_multi (checkpoint once, 3 threads)
-    "rfm_segments": 7,
-    "customer_revenue_gini": 6,
-    "ranking_rank_correlation": 6,
-    "zipf_fit": 6,
-    "vocab_oov_rate": 6,
-    "peak_concurrent_sessions": 6,
-    # round 7: grand total switched from MAX(cum) to SUM(revenue)
-    # over the checkpointed cumsum frame (sign-robust, ADVICE r06)
-    "part_abc_classes": 7,
-    # round 7: global_cumsum's NULL semantics were rewired (non-null
-    # prefix census + coalesce); these two consume it through the
-    # priority-value rank pipeline, so their r06 badges attest the old
-    # cumsum body (outputs identical for the non-null inputs tested,
-    # but the badge must attest the shipping body -- ADVICE r07)
-    "ks_priority_value": 7,
-    "mannwhitney_priority_value": 7,
-    # round 7: kmeans_fit now carries empty cells forward (the Lloyd
-    # empty-cluster fallback) — every consumer of the shared
-    # _ivf_cents16 quantizer / ann index re-attests on the new fit
-    # (outputs are identical at tested SFs where no cell empties,
-    # but the badge must attest the shipping body)
-    "ivf_recall_check": 7,
-    "ivf_cell_balance": 7,
-    "ann_index_parity": 7,
-    # round 9: strip_suffix_block grew the greatest()-clamp (ADVICE r08
-    # short-name mega-block fix; oracle updated to match) and
-    # blocked_edit_pairs runs under the new max_block_names guard — the
-    # r8 badge attests the unclamped, unguarded body
-    "customer_name_linkage": 9,
-    # round 9: daily digest stage rewired from digest_by_group (whole
-    # group in one pandas batch) to digest_by_partition (per-batch
-    # partials + mergeable rollup) — the r8 badge attests the
-    # bounded-group body
-    "value_quantile_sketch": 9,
-    # round 9: embedding_near_dups runs under the new max_block_rows
-    # fail-loudly guard (output unchanged at every tested SF)
-    "embedding_similar_pairs": 9,
-    # round 10: train_bpe_from_counts rewired from full pair recount to
-    # incremental Counter-diff maintenance + lazy-deletion heap argmax
-    # (pytest pins merges bit-identical, but the badge must attest the
-    # shipping trainer); bumped to 11 below with the index pruning.
-    # round 11: the ANN/incremental near-dup pair collapse moved from
-    # full-row distinct to keys-only groupBy+max (ADVICE r10 — outputs
-    # identical unless a last-ulp rounding boundary is hit), and the
-    # BPE trainer prunes its inverted index at count zero (merges
-    # pinned bit-identical by pytest) — badges must attest the
-    # shipping bodies
-    "embedding_near_dups_ann": 11,
-    "bpe_vocab_train": 11,
-    "bpe_artifact_roundtrip": 11,
-    "bpe_fertility_audit": 11,
-    # round 12 (ADVICE r11 fixes — outputs identical at every tested
-    # SF, but the badge must attest the shipping bodies): the probe
-    # stage is computed ONCE per batch and threaded through
-    # (incremental_near_dups_indexed / embedding_near_dups_incremental
-    # new_probes param); query_pq_index now DELEGATES its rerank to
-    # pq.ivfpq_topk instead of duplicating it; add_to_index(if_absent)
-    # dedupes ids within the batch; the PNG decoder gained the
-    # pre-inflation size cap + bounded decompressobj + Adam7 support
-    "media_decode_png": 12,
-    # round 13: the persisted-index writes cluster by cell before
-    # partitionBy (one file per cell instead of n_tasks x n_cells
-    # slivers — rows identical, layout is the body) and the exact
-    # rerank/probe composition consumes them
-    "ann_index_parity": 13,
-    "embedding_incremental_near_dups": 13,
-    "embedding_near_dups_indexed": 13,
-    "streaming_near_dups": 13,
-    # round 13: write_bucketed pre-clusters on the writer's bucket-id
-    # expression (one file per bucket instead of n_tasks per bucket —
-    # rows and join plans identical, layout is the body)
-    "bucketed_colocated_join": 13,
-    # round 13: ADC scoring rewired from the per-pair element_at
-    # BroadcastNestedLoopJoin expression onto the Arrow table-gather
-    # kernel (pq_adc_topk) / the cell-grouped IVFADC kernel
-    # (pq_adc_topk_grouped, consumed by ivfpq_topk, query_pq_index and
-    # incremental_near_dups_pq) — scores are bit-identical by
-    # construction (same driver-computed tables, same left-fold sum)
-    # and pytest pins pair-form==grouped-form row equality, but the
-    # badges must attest the shipping kernels (r12 verdict item 1)
-    "pq_adc_recall": 13,
-    "ivfpq_recall": 13,
-    "ivfpq_rerank_recall": 13,
-    "ivfpq_index_parity": 13,
-    "pq_near_dups_incremental": 13,
-    # round 13 (optimization): the BPE trainer's heap pushes on count
-    # increases only (stale-high entries corrected at pop — merges
-    # pinned bit-identical, hash-compared against the previous form),
-    # _merge_seq_delta drops the per-token starts list for a sparse
-    # site map (20k-case fuzz vs the Counter-diff reference), and the
-    # monotone-compression entries encode both rank sets in ONE fused
-    # Arrow pass (apply_bpe_multi, per-set stats pinned bit-identical
-    # by pytest)
-    "bpe_vocab_train": 13,
-    "bpe_artifact_roundtrip": 13,
-    "bpe_fertility_audit": 13,
-    # round 13 (optimization, continued): verdict/grid/replicate
-    # frames moved onto JVM literal relations (localframe.local_rows —
-    # values bit-identical to createDataFrame by the repr-cast
-    # contract); probe_assignments rewired from broadcast-join +
-    # row_number window to the map-side literal top-n_probe (pinned
-    # row-identical by pytest at n_probe below/at/above k — consumers
-    # ivf_recall_check / embedding_near_dups_ann traverse it);
-    # winnow_minima repartitions raw text by id below the gram explode
-    # (explicit count — AQE can't see the explode); the sessionize
-    # drains run under the bounded state-partition knob; the quantile
-    # audit's three ranks share one sketch + one multi-band pass; the
-    # conformal model is checkpointed with n_train read off its group
-    # counts. Outputs identical (SIM_r13 301/301), bodies rewired.
-    "ivf_recall_check": 13,
-    "value_quantile_sketch": 13,
-    "poisson_bootstrap_ci": 13,
-    "permutation_test_priority_value": 13,
-    "reorder_survival_km": 13,
-    "weighted_sample_ares": 13,
-    "winnow_fingerprints": 13,
-    "winnow_pairs": 13,
-    "quantile_sketch_audit": 13,
-    "conformal_price_interval": 13,
-    "streaming_sessionize": 13,
-    "streaming_sessionize_closed": 13,
-    "embedding_near_dups_ann": 13,
-    # round 14 (optimization round 2): the composed IVFPQ retrievals
-    # consume the session-shared cell-carrying codes frame (pq_encode
-    # keep=["cell"] — the enc×cells equi-join is gone); the rerank
-    # entry reads both the composed re-rank and the bare-ADC top-5 off
-    # ONE grouped kernel pass (shortlist_df; top-5-of-top-50 pinned by
-    # pytest); ivfpq_recall swaps the materialized candidate pair
-    # frame for the grouped kernel + driver-side cell-size tallies;
-    # the persisted-index paths run on cached frozen-centroid rows
-    # with lazy probes/pairs and metadata row counts; the streaming
-    # entry reuses the session assignment for the index build and the
-    # batch twin; the exact 0.35-census is session-shared across its
-    # three consumers and guarded by max_total_pair_work; the span
-    # scrub shuffles text below the explode and materializes the
-    # window-hash table once; peak's boundary rollup is checkpointed
-    # before the range phase; _ranged fuses cumsum's value census into
-    # the row census (one collect) — every two-phase consumer
-    # traverses it; dup_clusters carries the previous label through
-    # the round checkpoint (convergence check is join-free). Outputs
-    # identical (driver-sim green per change; SIM_r14 full sweep at
-    # close), bodies rewired.
-    "pq_adc_recall": 14,
-    "ivfpq_recall": 14,
-    "ivfpq_rerank_recall": 14,
-    "ivfpq_index_parity": 14,
-    "ann_index_parity": 14,
-    "pq_near_dups_incremental": 14,
-    "embedding_near_dups_indexed": 14,
-    "streaming_near_dups": 14,
-    "embedding_similar_pairs": 14,
-    "embedding_near_dups_ann": 14,
-    "embedding_incremental_near_dups": 14,
-    "span_scrub_stats": 14,
-    "peak_concurrent_sessions": 14,
-    "order_value_deciles": 14,
-    "rfm_segments": 14,
-    "part_abc_classes": 14,
-    "customer_revenue_gini": 14,
-    "ranking_rank_correlation": 14,
-    "zipf_fit": 14,
-    "mannwhitney_priority_value": 14,
-    "ks_priority_value": 14,
-    "score_decile_lift": 14,
-    "revenue_lorenz_deciles": 14,
-    "hybrid_rank_fusion": 14,
-    "dedup_clusters": 14,
-    "dedup_clusters_portable": 14,
-    "dedup_keep_list": 14,
-    # winnow entries traverse the shuffle-partitions conf fallback
-    # (ADVICE r13 fix) in winnow_minima
-    "winnow_fingerprints": 14,
-    "winnow_pairs": 14,
-}
-
-# Late registrations: FIFO fairness inside the never-proven queue.
-# Names registered in earlier rounds have waited longest for the
-# bounded 50-slot window; later registrations queue behind them
-# regardless of file position.  Unlisted names carry round 0.
-_REGISTERED_ROUND: dict[str, int] = {
-    "ann_index_parity": 6,
-    "pq_adc_recall": 6,
-    "ivfpq_recall": 6,
-    "subword_token_stats": 6,
-    "mojibake_audit": 6,
-    "streaming_sessionize": 7,
-    "streaming_sessionize_closed": 8,
-    "value_quantile_sketch": 8,
-    "customer_name_linkage": 8,
-    "part_phonetic_linkage": 9,
-    "bpe_fertility_audit": 9,
-    "embedding_near_dups_ann": 10,
-    "bpe_vocab_train": 10,
-    "bpe_artifact_roundtrip": 10,
-    "embedding_incremental_near_dups": 10,
-    "ivfpq_rerank_recall": 11,
-    "embedding_near_dups_indexed": 11,
-    "media_decode_png": 11,
-    "streaming_near_dups": 11,
-    "ivfpq_index_parity": 11,
-    "pq_near_dups_incremental": 12,
-    "zorder_locality": 12,
-    "zorder_pruning_audit": 12,
-    "bucketed_colocated_join": 12,
-    "dynamic_partition_pruning_join": 12,
-    "bucketed_point_lookup": 13,
-    "zorder3_pruning_audit": 13,
-}
-
-# Production-hash (xxhash64) near-dup twins: benchmarked (bench.py
-# sweeps the full QUERIES registry) and unit-tested with planted
-# duplicates, but excluded from the driver-facing queries() --
-# xxhash64 has no DuckDB expression so these can never carry an
-# oracle, and the IDENTICAL pipeline with the md5-portable hash family
-# is driver-value-checked end to end (minhash_portable /
-# lsh_pairs_portable / dedup_clusters_portable / simhash_portable).
+# Production-hash (xxhash64) near-dup twins: unit-tested with planted
+# duplicates but excluded from queries() -- xxhash64 has no DuckDB
+# expression, so these can never carry an oracle. The IDENTICAL
+# pipeline with the md5-portable hash family is oracle-checked end to
+# end (minhash_portable / lsh_pairs_portable / dedup_clusters_portable /
+# simhash_portable).
 _LIBRARY_ONLY = frozenset(
     {"minhash_lsh_pairs", "dedup_clusters", "simhash_signatures"}
 )
 
 
-def _proven_rounds() -> dict[str, int]:
-    """name -> latest round with an all-three-green driver row.
-
-    Reads the committed CORRECTNESS_r{NN}.json artifacts at the repo
-    root (two levels above this package).  Missing or corrupt
-    artifacts are skipped; with no artifacts at all every name is
-    never-proven and the window degrades to registration order, which
-    is safe (a fresh clone simply re-proves from the front).
-    """
-    root = _Path(__file__).resolve().parents[2]
-    latest: dict[str, int] = {}
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = _re.search(r"r(\d+)", path.stem)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = _json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _rotated(names: list[str]) -> list[str]:
-    """Driver-window schedule: never-proven names first (they have NO
-    green row at all -- the bounded 50-entry check window must reach
-    them before anything else), then reverify names (proven once, body
-    since rewired -- their fresh row re-attests a rewrite, not a first
-    proof), then the attested tail."""
-    proven = _proven_rounds()
-    names = [n for n in names if n not in _LIBRARY_ONLY]
-    never = [n for n in names if n not in proven]
-    pos = {n: i for i, n in enumerate(never)}
-    never.sort(key=lambda n: (_REGISTERED_ROUND.get(n, 0), pos[n]))
-    revs = [
-        n for n in names if n in proven and proven[n] < _REWIRED.get(n, 0)
-    ]
-    attested = [
-        n for n in names if n in proven and proven[n] >= _REWIRED.get(n, 0)
-    ]
-    # Stalest proof first: with the registry closed every future window
-    # is re-proofs, so schedule the names whose green row is OLDEST
-    # (mostly round-1 badges) before recently re-attested ones.  Sort is
-    # stable, so ties keep registration order.
-    attested.sort(key=lambda n: proven[n])
-    return never + revs + attested
-
-
 def queries() -> dict[str, QueryFn]:
-    return {n: QUERIES[n] for n in _rotated(list(QUERIES))}
+    """Every oracle-checkable query, in registration order."""
+    return {n: fn for n, fn in QUERIES.items() if n not in _LIBRARY_ONLY}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {n: ORACLES[n] for n in _rotated(list(QUERIES)) if n in ORACLES}
+    """The DuckDB twin of each ``queries()`` entry, in the same order."""
+    return {n: ORACLES[n] for n in queries() if n in ORACLES}

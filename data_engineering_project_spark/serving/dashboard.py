@@ -248,7 +248,7 @@ def render_dashboard(
     from data_engineering_project_spark.plans import analytics
 
     if frames is None:
-        from data_engineering_project_spark.plans.workload import gold
+        from data_engineering_project_spark.plans.medallion import gold
 
         frames = gold(spark, sf_dir)
         if source_label is None:

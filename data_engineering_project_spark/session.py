@@ -46,8 +46,8 @@ _DEFAULTS = {
     ),
     "spark.ui.enabled": "false",
     # No console progress bar: its \r-terminated repaints interleave
-    # with stdout when a harness merges streams, breaking one-line
-    # machine-readable output contracts (bench.py).
+    # with stdout when a harness merges streams, breaking the
+    # machine-readable last line of perfbench/run.py.
     "spark.ui.showConsoleProgress": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
@@ -57,8 +57,9 @@ def get_spark(app_name: str = "data-engineering-project-spark") -> SparkSession:
     """Build (or reuse) the session.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``);
-    ``spark.sql.shuffle.partitions`` defaults to 2× cores locally — on a
-    real cluster this should be set to ~2-3× total executor cores and AQE
+    ``spark.sql.shuffle.partitions`` defaults to 32 whatever the core
+    count (override with ``SPARK_GRAFT_SHUFFLE_PARTITIONS``) — on a real
+    cluster this should be set to ~2-3× total executor cores and AQE
     will coalesce down.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")

@@ -4,7 +4,8 @@ update in SURVEY.md §2.1).
 
 Vanilla parquet has no in-place UPDATE/MERGE, so the ledger is
 read-modify-overwrite: new rows anti-join out their old versions, the
-union overwrites via write-to-temp + atomic directory swap. The table
+union overwrites via write-to-temp + the crash-safe directory swap of
+``sources/swap.py`` (``read()`` recovers an interrupted swap). The table
 is tiny by construction (one row per ingested file), so the full
 rewrite is O(files) — the pattern would be Delta ``MERGE`` on a real
 deployment, with identical semantics.
@@ -13,7 +14,6 @@ deployment, with identical semantics.
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +25,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from data_engineering_project_spark.sources.swap import recover_swap, swap_in
 
 LEDGER_SCHEMA = StructType(
     [
@@ -48,6 +50,7 @@ class ControlTable:
         self.key = key
 
     def read(self) -> DataFrame:
+        recover_swap(self.path)
         if os.path.exists(self.path):
             return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
         return self.spark.createDataFrame([], LEDGER_SCHEMA)
@@ -55,9 +58,7 @@ class ControlTable:
     def _overwrite(self, df: DataFrame) -> None:
         tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.replace(tmp, self.path)
+        swap_in(tmp, self.path)
 
     def upsert(self, records: DataFrame) -> None:
         """INSERT ... ON CONFLICT (file_name) DO UPDATE equivalent

@@ -21,20 +21,16 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineering_project_spark.sources.swap import recover_swap, swap_in
+
 
 def recover_table(path: str) -> None:
-    """Recover from a crash mid-swap: if ``path`` is missing but its
-    ``.__old__`` backup exists (died between the two renames), the
-    backup is the authoritative table — rename it back. If both exist
-    (died after the swap, before the backup delete), the new table
-    was validated BEFORE the swap (erase_subjects counts the staging
-    parquet before any rename), so the stale backup is dropped."""
-    backup = path.rstrip("/") + ".__old__"
-    if os.path.exists(backup):
-        if os.path.exists(path):
-            shutil.rmtree(backup)
-        else:
-            os.rename(backup, path)
+    """Recover from a crash mid-erasure: resolve an interrupted swap
+    (:func:`~data_engineering_project_spark.sources.swap.recover_swap`
+    — safe to drop a stale backup because erase_subjects validates the
+    staging parquet before any rename) and drop an unswapped staging
+    write."""
+    recover_swap(path)
     staging = path.rstrip("/") + ".__erase__"
     if os.path.exists(staging):
         # an unswapped staging write is garbage from a failed run
@@ -73,16 +69,11 @@ def erase_subjects(
         # Validate the staged table READS before any rename — a torn or
         # corrupt staged write must fail HERE, while the live table is
         # still untouched. After this point every on-disk state is
-        # recoverable: recover_table()'s both-exist branch may safely
+        # recoverable: recover_swap()'s both-exist branch may safely
         # drop the backup because the swapped-in table was already
-        # validated pre-swap. POSIX-rename semantics only; an
-        # object-store deployment would commit through sources/txlog.py
-        # instead.
+        # validated pre-swap.
         n_after = spark.read.parquet(staging).count()
-        backup = path.rstrip("/") + ".__old__"
-        os.rename(path, backup)
-        os.rename(staging, path)
-        shutil.rmtree(backup)
+        swap_in(staging, path)
         dropped[path] = n_before - n_after
     if audit_dir is not None:
         audit = spark.createDataFrame(

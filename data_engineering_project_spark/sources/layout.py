@@ -165,18 +165,19 @@ def compact_small_files(
 
     Strategy: size the output file count from the CURRENT on-disk
     bytes (ceil(total/target)), rewrite to a staging directory
-    alongside the table, then swap directories. The swap is two
-    renames — not atomic for concurrent readers; a production lake
-    would commit the rewrite through a table format's log (or this
-    repo's sources/txlog.py) instead. Returns {files_before,
-    files_after, bytes}.
+    alongside the table, then swap directories (sources/swap.py). The
+    swap is crash-safe but two renames — not atomic for concurrent
+    readers; a production lake would commit the rewrite through a
+    table format's log (or this repo's sources/txlog.py) instead.
+    Returns {files_before, files_after, bytes}.
 
     ``sort_within_by`` re-sorts rows inside each output file so
     compaction doubles as a re-clustering pass (see write_clustered).
     """
     import math
     import os
-    import shutil
+
+    from data_engineering_project_spark.sources.swap import swap_in
 
     files = [
         os.path.join(dp, f)
@@ -192,10 +193,7 @@ def compact_small_files(
         compacted = compacted.sortWithinPartitions(*sort_within_by)
     staging = path.rstrip("/") + ".__compact__"
     compacted.write.mode("overwrite").parquet(staging)
-    backup = path.rstrip("/") + ".__old__"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
+    swap_in(staging, path)
     after = [
         f
         for dp, _, fs in os.walk(path)

@@ -12,19 +12,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan (glob-capable). Column pruning and predicate pushdown
@@ -66,12 +53,50 @@ def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (serving/SQL surface)."""
-    for table in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        if os.path.exists(path):
-            read_parquet(spark, path).createOrReplaceTempView(table)
+_CONFS_PINNED: set[str] = set()
+
+
+def _ensure_session_confs(spark: SparkSession) -> None:
+    """Pin the runtime-settable confs the testdata semantics depend on,
+    for sessions not built by ``session.get_spark``: nanos-parquet reads
+    (events table) and UTC time semantics (dayname/period vs the DuckDB
+    oracle). Pinned once per application: each conf.set is a py4j round
+    trip, and this runs on every load() call."""
+    app = spark.sparkContext.applicationId
+    if app in _CONFS_PINNED:
+        return
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _CONFS_PINNED.add(app)
+
+
+# Session-memoized base-table RELATIONS: every `spark.read.parquet(path)`
+# call costs ~100 ms of single-threaded driver work (file listing +
+# footer schema inference) before any action runs, and the query
+# registry calls load() hundreds of times for immutable inputs.
+# Memoizing the LAZY frame is plan reuse, not result caching — every
+# action still scans the parquet files; only the relation construction
+# (schema/footer) is shared, exactly what `spark.table` does through a
+# catalog entry on a real lake.
+_TABLE_FRAMES: dict[tuple[str, str, str], DataFrame] = {}
+
+
+def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Memoized :func:`read_testdata`, one relation per (application,
+    sf_dir, table).
+
+    IMMUTABILITY ASSUMPTION: the memoized relation snapshots the table's
+    file listing + schema at first load; a caller that rewrites an
+    input dir mid-session must call ``_TABLE_FRAMES.clear()`` (or use a
+    fresh SparkSession) or the cached frame will reference
+    stale/deleted files."""
+    _ensure_session_confs(spark)
+    key = (spark.sparkContext.applicationId, sf_dir, table)
+    df = _TABLE_FRAMES.get(key)
+    if df is None:
+        df = read_testdata(spark, sf_dir, table)
+        _TABLE_FRAMES[key] = df
+    return df
 
 
 def write_parquet(

@@ -6,12 +6,11 @@ compares a hash over the *string-rendered cells including dtype-visible
 formatting* (so a DuckDB HUGEINT->object/float column vs Spark int64 shows
 up, as it does in the driver's hasher).
 
-Usage: python scripts_driver_sim.py [query ...]   (default: first 50 window)
+Usage: python scripts_driver_sim.py [query ...]   (default: the first 50
+                                                    queries() entries)
        python scripts_driver_sim.py --all         (full registry sweep;
-           set SPARK_GRAFT_SIM_OUT=SIM_rNN.json to commit the result --
-           the once-per-round cadence closing the rotation gap: a
-           rotated-out name's rewire can otherwise rot ~6 rounds
-           between its driver re-attestation windows)
+           set SPARK_GRAFT_SIM_OUT=<file>.json to write a pass/fail
+           summary of the sweep)
 """
 
 from __future__ import annotations
@@ -152,9 +151,9 @@ def main() -> int:
         print(f"  FAIL {n}: {why}")
     out = os.environ.get("SPARK_GRAFT_SIM_OUT")
     if out and not full_sweep:
-        # the committed SIM_rNN.json attests the FULL registry; a
-        # spot-check run must never overwrite it with a tiny n_checked
-        # that still looks authoritative
+        # the summary attests the FULL registry; a spot-check run must
+        # never overwrite it with a tiny n_checked that still looks
+        # authoritative
         print(
             f"SPARK_GRAFT_SIM_OUT={out} ignored: artifact is written "
             "only by a --all sweep",

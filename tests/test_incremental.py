@@ -212,6 +212,63 @@ def test_ledger_upsert_and_update(spark, tmp_path):
     assert ledger.read().collect()[0].note == "unchanged"
 
 
+def _ledger_row(spark, name, note):
+    from datetime import datetime
+
+    from data_engineering_project_spark.sources.control_table import LEDGER_SCHEMA
+
+    return spark.createDataFrame(
+        [(name, "fp", datetime(2024, 1, 1), 1, 1, "OK", note)], LEDGER_SCHEMA
+    )
+
+
+def test_ledger_recovers_from_dangling_backup(spark, tmp_path):
+    """A crash between the two swap renames leaves only ledger.__old__;
+    read() must restore it instead of returning an empty ledger."""
+    import shutil
+
+    path = str(tmp_path / "ledger")
+    ledger = ControlTable(spark, path)
+    ledger.upsert(_ledger_row(spark, "f1.parquet", "first"))
+    # simulate the torn swap: the rows live only in the backup
+    os.rename(path, path + ".__old__")
+    assert [r.file_name for r in ledger.read().collect()] == ["f1.parquet"]
+    assert not os.path.exists(path + ".__old__")
+    # stale backup alongside a live ledger (crash before the backup delete)
+    shutil.copytree(path, path + ".__old__")
+    ledger.upsert(_ledger_row(spark, "f2.parquet", "second"))
+    assert sorted(r.file_name for r in ledger.read().collect()) == [
+        "f1.parquet",
+        "f2.parquet",
+    ]
+    assert not os.path.exists(path + ".__old__")
+
+
+def test_ledger_swap_failure_keeps_rows(spark, tmp_path, monkeypatch):
+    """Inject a failure at each rename of the swap: the ledger never
+    loses the rows it held before the failed upsert."""
+    from data_engineering_project_spark.sources import swap
+
+    path = str(tmp_path / "ledger")
+    ledger = ControlTable(spark, path)
+    ledger.upsert(_ledger_row(spark, "f1.parquet", "first"))
+    real_rename = os.rename
+    for fail_at in (1, 2):
+        calls = []
+
+        def flaky_rename(src, dst, fail_at=fail_at, calls=calls):
+            calls.append(src)
+            if len(calls) == fail_at:
+                raise OSError("injected crash")
+            real_rename(src, dst)
+
+        monkeypatch.setattr(swap.os, "rename", flaky_rename)
+        with pytest.raises(OSError, match="injected"):
+            ledger.upsert(_ledger_row(spark, "f9.parquet", "lost"))
+        monkeypatch.setattr(swap.os, "rename", real_rename)
+        assert [r.file_name for r in ledger.read().collect()] == ["f1.parquet"]
+
+
 def test_merge_aggregate_equals_full_recompute(spark, sf_dir):
     """Folding one month's partial into the materialized aggregate
     yields exactly the full-recompute answer (additive measures)."""

@@ -67,3 +67,44 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 1
     assert rows[0]["total_orders"] > 0
+
+
+def test_queries_are_registration_order_minus_library_only():
+    """queries() reads no file and reorders nothing: the registry in
+    registration order, minus the xxhash64 twins that have no oracle."""
+    expected = [n for n in workload.QUERIES if n not in workload._LIBRARY_ONLY]
+    assert list(workload.queries()) == expected
+    assert list(workload.oracle_sql()) == [
+        n for n in expected if n in workload.ORACLES
+    ]
+
+
+def test_only_the_registry_imports_the_registry():
+    """No program module depends on plans/workload.py: the library and
+    serving layers stand without the oracle registry."""
+    import ast
+    import pathlib
+
+    import data_engineering_project_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    registry = root / "plans" / "workload.py"
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == registry:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:  # resolve `from .x import y` to absolute
+                    pkg_parts = path.relative_to(root.parent).parent.parts
+                    anchor = pkg_parts[: len(pkg_parts) - node.level + 1]
+                    base = ".".join([*anchor, base] if base else anchor)
+                mods = [base] + [f"{base}.{a.name}" for a in node.names]
+            else:
+                continue
+            if any(m.endswith("plans.workload") for m in mods):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
