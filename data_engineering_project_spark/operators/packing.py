@@ -85,7 +85,7 @@ def pack_sequences(
             if cur_tok + n_tok > max_tokens and cur_ids:
                 packs.append((cur_ids, cur_tok, False))
                 cur_ids, cur_tok = [], 0
-            cur_ids = cur_ids + [int(doc_id)]
+            cur_ids.append(int(doc_id))
             cur_tok += n_tok
         if cur_ids:
             packs.append((cur_ids, cur_tok, False))

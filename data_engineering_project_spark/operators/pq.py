@@ -549,6 +549,24 @@ def pq_adc_topk_grouped(
     return _rank_topk(local, k)
 
 
+# ivfpq_topk collects its queries and their (query, cell) probes to the
+# driver; more rows than this in either fails loudly instead of
+# exhausting driver memory.
+IVFPQ_DRIVER_ROWS = 100_000
+
+
+def _collect_bounded(df: DataFrame, what: str):
+    """``df.toPandas()`` of at most ``IVFPQ_DRIVER_ROWS`` rows; reads
+    one row past the budget (same job) and raises if it is there."""
+    pdf = df.limit(IVFPQ_DRIVER_ROWS + 1).toPandas()
+    if len(pdf) > IVFPQ_DRIVER_ROWS:
+        raise ValueError(
+            f"ivfpq_topk: {what} exceed the driver row budget"
+            f" IVFPQ_DRIVER_ROWS={IVFPQ_DRIVER_ROWS}; split the queries"
+        )
+    return pdf
+
+
 def ivfpq_topk(
     cells: DataFrame,
     encoded: DataFrame,
@@ -579,7 +597,8 @@ def ivfpq_topk(
     lists), ``encoded`` = the PQ codes (:func:`pq_encode`),
     ``codebooks``/``cents`` = the trained quantizers. ``queries`` is a
     bounded DataFrame (collected driver-side for the ADC lookup
-    tables, exactly like :func:`pq_adc_topk`).
+    tables, exactly like :func:`pq_adc_topk`); queries or probes past
+    ``IVFPQ_DRIVER_ROWS`` raise ValueError.
 
     Scale shape: the probe join touches ~n_probe/k_cells of the codes;
     the exact stage scores |queries| × ``shortlist`` rows — a
@@ -613,7 +632,7 @@ def ivfpq_topk(
         sl = shortlist_df
     else:
         if probes_pdf is None:
-            probes_pdf = probes.select("query_id", "cell").toPandas()
+            probes_pdf = _collect_bounded(probes.select("query_id", "cell"), "probes")
         # the shortlist stage is the grouped IVFADC kernel: each code
         # row scores against exactly the queries probing its cell,
         # streaming the codes once — no (query, id) pair frame. A
@@ -627,7 +646,7 @@ def ivfpq_topk(
             if "cell" in encoded.columns
             else encoded.join(cells.select(id_col, "cell"), id_col)
         )
-        qp = queries.select(id_col, vec_col).toPandas()
+        qp = _collect_bounded(queries.select(id_col, vec_col), "queries")
         sl = pq_adc_topk_grouped(
             enc_cells,
             codebooks,

@@ -15,6 +15,11 @@ Physical strategy:
   cardinality, which partial aggregation shrinks map-side.
 - monetary outputs are rounded to 2dp — the reference's own display
   precision and our cross-engine comparison contract.
+
+Serving: each query is wrapped by ``result_cache.snapshot_cached``.
+Over bare local parquet scans a repeat call on an unchanged gold
+snapshot returns the stored LocalRelation answer (0 Spark jobs); any
+other input frame gets the lazy plan below, unchanged.
 """
 
 from __future__ import annotations
@@ -32,6 +37,7 @@ from data_engineering_project_spark.functions import (
     month_period,
     weekday_index,
 )
+from data_engineering_project_spark.plans.result_cache import snapshot_cached
 
 
 def _with_state(fact: DataFrame, dim_customers: DataFrame, states: Sequence[str] | None) -> DataFrame:
@@ -42,6 +48,7 @@ def _with_state(fact: DataFrame, dim_customers: DataFrame, states: Sequence[str]
     return joined
 
 
+@snapshot_cached
 def kpis(
     fact: DataFrame, dim_customers: DataFrame, states: Sequence[str] | None = None
 ) -> DataFrame:
@@ -69,6 +76,7 @@ def kpis(
     )
 
 
+@snapshot_cached
 def top_categories(
     fact: DataFrame,
     dim_products: DataFrame,
@@ -91,6 +99,7 @@ def top_categories(
     )
 
 
+@snapshot_cached
 def orders_by_state(
     fact: DataFrame, dim_customers: DataFrame, states: Sequence[str] | None = None
 ) -> DataFrame:
@@ -103,6 +112,7 @@ def orders_by_state(
     )
 
 
+@snapshot_cached
 def delivery_days_by_state(
     fact: DataFrame, dim_customers: DataFrame, states: Sequence[str] | None = None
 ) -> DataFrame:
@@ -121,6 +131,7 @@ def delivery_days_by_state(
     )
 
 
+@snapshot_cached
 def freight_by_state(
     fact: DataFrame, dim_customers: DataFrame, states: Sequence[str] | None = None
 ) -> DataFrame:
@@ -138,6 +149,7 @@ def freight_by_state(
     )
 
 
+@snapshot_cached
 def monthly_trend(
     fact: DataFrame, dim_customers: DataFrame, states: Sequence[str] | None = None
 ) -> DataFrame:
@@ -150,6 +162,7 @@ def monthly_trend(
     )
 
 
+@snapshot_cached
 def weekday_seasonality(
     fact: DataFrame, dim_customers: DataFrame, states: Sequence[str] | None = None
 ) -> DataFrame:

@@ -258,8 +258,11 @@ def render_dashboard(
     fact = frames["fact_sales"]
     dc, dp = frames["dim_customers"], frames["dim_products"]
 
-    # all seven charts read the same frames: one persisted lineage,
-    # seven cheap collects, instead of seven fact re-scans
+    # all seven charts read the same frames. Over bare gold parquet
+    # scans the analytics result cache answers repeat renders with no
+    # job, and a miss fills it; the persist below serves the misses and
+    # every uncached frame (e.g. the derived testdata gold) from one
+    # lineage, instead of seven fact re-scans
     fact = fact.persist()
     dc, dp = dc.persist(), dp.persist()
     try:

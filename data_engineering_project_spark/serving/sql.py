@@ -115,6 +115,12 @@ def cache_gold_views(
     ``uncache_gold_views`` (or restart the session) after a gold
     rebuild — a stale cache serves the OLD snapshot by design
     (dashboards want a consistent snapshot, not torn reads).
+
+    This caches table *inputs*, which text-to-SQL (never result-cached)
+    reads. The seven fixed dashboard queries also have a *result* cache
+    (``plans/result_cache.py``) keyed by the gold files' identity; it
+    needs no uncache after a rebuild, and a miss there reads through
+    this cache like any other query.
     """
     for name, df in gold.items():
         cached = df.cache()

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_project_spark.multimodal import (
@@ -582,3 +583,18 @@ def test_probe_assignments_matches_window_rank_form(spark, sf_dir):
             ).collect()
         )
         assert old == new
+
+
+def test_literal_centroid_argmax_bounded_in_k(spark):
+    """The inlined-centroid argmax refuses k past MAX_LITERAL_CENTROIDS
+    (its analyzer cost is super-linear in k), naming k; at the bound it
+    still builds, and the assignment operators fail loudly the same way."""
+    bound = similarity.MAX_LITERAL_CENTROIDS
+    rows = [{"label": i, "centroid": [float(i), 1.0]} for i in range(bound + 1)]
+    norm_sql, argmax_sql = similarity._argmax_cell_exprs(rows[:bound], "v")
+    assert argmax_sql.count("struct(") == bound
+    with pytest.raises(ValueError, match=f"k={bound + 1} .*MAX_LITERAL_CENTROIDS={bound}"):
+        similarity._argmax_cell_exprs(rows, "v")
+    corpus = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match=f"k={bound + 1}"):
+        similarity._assign_cells_rows(corpus, rows)

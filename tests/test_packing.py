@@ -108,3 +108,37 @@ def test_pack_then_export_jsonl_shards(spark, sf_dir, tmp_path):
     assert back.filter(
         (F.col("total_tokens") > 512) & (~F.col("truncated"))
     ).count() == 0
+
+
+def _next_fit_reference(docs, budget):
+    """The packer's greedy next-fit loop as first written (copying the
+    id list on every document): the reference the in-place append must
+    reproduce pack for pack."""
+    packs, cur_ids, cur_tok = [], [], 0
+    for doc_id, n_tok in sorted(docs):
+        if n_tok > budget:
+            if cur_ids:
+                packs.append((cur_ids, cur_tok, False))
+                cur_ids, cur_tok = [], 0
+            packs.append(([doc_id], n_tok, True))
+            continue
+        if cur_tok + n_tok > budget and cur_ids:
+            packs.append((cur_ids, cur_tok, False))
+            cur_ids, cur_tok = [], 0
+        cur_ids = cur_ids + [doc_id]
+        cur_tok += n_tok
+    if cur_ids:
+        packs.append((cur_ids, cur_tok, False))
+    return packs
+
+
+def test_packs_identical_to_copying_reference(spark):
+    """Fixed input, one shard: every pack (ids, tokens, truncated flag)
+    equals the reference loop's, in order — a flush must never leave
+    the next pack aliasing the previous pack's id list."""
+    docs = [(i, (i * 37) % 90 + 5) for i in range(200)] + [(500, 300), (501, 120)]
+    df = spark.createDataFrame(docs, "doc_id long, n_tok long")
+    got = packing.pack_sequences(df, "doc_id", "n_tok", 120, num_shards=1).orderBy("pack_id").collect()
+    want = _next_fit_reference(docs, 120)
+    assert [(list(r.doc_ids), r.total_tokens, r.truncated) for r in got] == want
+    assert [r.pack_id for r in got] == list(range(len(want)))

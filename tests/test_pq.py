@@ -451,3 +451,27 @@ def test_ivfpq_topk_accepts_precomputed_shortlist(spark, emb, books, encoded):
     a = sorted(map(tuple, via_df.collect()))
     b = sorted(map(tuple, direct.collect()))
     assert a == b and len(a) > 0
+
+
+def test_ivfpq_topk_refuses_queries_past_driver_budget(emb, books, encoded, monkeypatch):
+    """Queries and probes are collected to the driver under a row
+    budget: past it the call raises, naming the budget, instead of
+    collecting everything."""
+    from data_engineering_project_spark.operators import similarity
+
+    cents = similarity.kmeans_fit(emb, k=4, iters=1)
+    cells = similarity.assign_cells(emb, cents)
+    queries = emb.filter(F.col("vec_id") < 6)
+    # 6 queries x 2 probes = 12 probe rows: over a budget of 8
+    monkeypatch.setattr(pq, "IVFPQ_DRIVER_ROWS", 8)
+    with pytest.raises(ValueError, match="probes exceed .*IVFPQ_DRIVER_ROWS=8"):
+        pq.ivfpq_topk(cells, encoded, books, cents, queries, k=2, n_probe=2, shortlist=5)
+    # probes handed through: the queries collect is the one guarded
+    monkeypatch.setattr(pq, "IVFPQ_DRIVER_ROWS", 5)
+    with pytest.raises(ValueError, match="queries exceed"):
+        pq.ivfpq_topk(cells, encoded, books, cents, queries, k=2, n_probe=2,
+                      shortlist=5, probes_pdf=[])
+    monkeypatch.setattr(pq, "IVFPQ_DRIVER_ROWS", 12)
+    rows = pq.ivfpq_topk(cells, encoded, books, cents, queries, k=2, n_probe=2,
+                         shortlist=5).collect()
+    assert {r.query_id for r in rows} == set(range(6))
