@@ -1,8 +1,9 @@
 """Deduplication operators over a text corpus.
 
 Beyond-reference capability (BASELINE.json north star). Four tiers,
-cheapest first; each is shuffle-minimal and fully distributed (no
-driver-side collects):
+cheapest first; each is shuffle-minimal and fully distributed. The one
+driver-side collect in the module is :func:`dup_clusters`' edge list,
+bounded by :data:`MAX_DRIVER_EDGES`:
 
 1. :func:`exact_dedup_groups` / :func:`exact_dedup` — md5-hash groupBy.
    One shuffle on a 128-bit key; at 100 TB the map-side partial
@@ -182,25 +183,91 @@ def minhash_lsh_candidates(
     )
 
 
+MAX_DRIVER_EDGES = 50_000
+"""Near-dup edge count up to which :func:`dup_clusters` solves the
+components with a union-find on the driver. Measured on a 4-core host
+with a random graph of 50,234 edges: the edge collect, the union-find and
+the label-frame build took 0.46-0.57 s together (collect 0.31-0.35 s;
+frame build alone 0.05 s for 35,000 label rows), and an action over the
+labels 0.28-0.31 s. Label propagation costs a checkpoint and a count per
+round instead."""
+
+
 def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over near-dup pairs → (doc id, cluster id).
 
     After LSH+verify produces pairwise matches, dedup needs GROUPS: if
-    A≈B and B≈C, keep one of {A,B,C}. That's connected components,
-    computed here by iterative min-label propagation — each round every
-    node adopts the smallest label among itself and its neighbors; the
-    loop stops when no label changes (converges in O(component
-    diameter) rounds, and near-dup clusters are shallow in practice).
+    A≈B and B≈C, keep one of {A,B,C}. That's connected components.
 
-    Scale shape: each round is one join on the (small) edge list + one
-    min-aggregate, both keyed on int ids — no driver-side union-find,
-    no O(n²) anything. Edges are symmetrized once up front;
-    ``localCheckpoint`` per round truncates the growing lineage (20
-    rounds of joins would otherwise stack into one giant plan).
+    Routing: the edges are collected with ``limit(MAX_DRIVER_EDGES + 1)``
+    — the one action the small case pays. At or under the budget a
+    driver union-find labels the components exactly, and the labels come
+    back as a JVM-only frame (:func:`_labels_frame`, no Python-worker
+    stage). Above it, :func:`_propagate_labels` runs distributed min-label
+    propagation, and raises if ``max_iter`` rounds do not converge.
 
     Returns one row per distinct doc id appearing in ``pairs``;
     ``cluster_id`` is the component's minimum doc id (so the canonical
     "keeper" is the row where doc_id == cluster_id).
+    """
+    id_type = (
+        pairs.select(F.col("id_a").alias("src"))
+        .union(pairs.select(F.col("id_b").alias("src")))
+        .schema["src"]
+        .dataType
+    )
+    rows = pairs.select("id_a", "id_b").limit(MAX_DRIVER_EDGES + 1).collect()
+    if len(rows) > MAX_DRIVER_EDGES:
+        return _propagate_labels(pairs, max_iter)
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # the smaller root wins, so every root is its component's min
+            parent[max(ra, rb)] = min(ra, rb)
+    labels = {x: find(x) for x in parent}
+    return _labels_frame(pairs.sparkSession, labels, id_type.simpleString())
+
+
+def _labels_frame(spark, labels: dict, id_type: str) -> DataFrame:
+    """(doc_id, cluster_id) rows from a driver dict, built in the JVM:
+    one comma-joined string literal per column, split, cast and zipped —
+    a Range + Generate plan with no Python RDD under it. (A ``VALUES``
+    literal of the same rows took 1.3 s to build at 10,000 rows, this
+    0.06 s.)"""
+    arr = f"array<{id_type}>"
+    if labels:
+        ids = F.split(F.lit(",".join(map(str, labels))), ",").cast(arr)
+        cls = F.split(F.lit(",".join(map(str, labels.values()))), ",").cast(arr)
+    else:
+        ids = cls = F.array().cast(arr)
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.arrays_zip(ids.alias("doc_id"), cls.alias("cluster_id")))
+    )
+
+
+def _propagate_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
+    """Connected components by iterative min-label propagation — the
+    path for edge lists above :data:`MAX_DRIVER_EDGES`. Each round every
+    node adopts the smallest label among itself and its neighbors; the
+    loop stops when no label changes (O(component diameter) rounds).
+
+    Scale shape: each round is one join on the edge list + one
+    min-aggregate, both keyed on int ids. Edges are symmetrized once up
+    front; ``localCheckpoint`` per round truncates the growing lineage
+    (20 rounds of joins would otherwise stack into one giant plan).
+    Raises ``ValueError`` when labels still change after ``max_iter``
+    rounds: a node of a longer chain would otherwise keep a non-minimum
+    label and its duplicate would survive.
     """
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -249,8 +316,13 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             "doc_id", F.col("new_cluster_id").alias("cluster_id")
         )
         if changed == 0:
-            break
-    return labels
+            return labels
+    n_labels = labels.select("cluster_id").distinct().count()
+    raise ValueError(
+        f"dup_clusters: labels still changing after max_iter={max_iter}"
+        f" propagation rounds ({n_labels} provisional components); a"
+        " near-dup chain is longer than the rounds can cover"
+    )
 
 
 def ngram_jaccard(
@@ -398,9 +470,12 @@ def lsh_candidates_portable(
 ) -> DataFrame:
     """Banded-LSH candidate pairs with the portable hash family —
     the whole candidate-generation pipeline is exactly reproducible in
-    DuckDB SQL (string_agg band keys). 8 rows per band keeps the
-    band-collision probability at jaccard^8, so same-bucket groups stay
-    tiny and the self-join never goes quadratic."""
+    DuckDB SQL (string_agg band keys). Each band holds
+    ``num_hashes // bands`` rows, and a pair collides in a band with
+    probability jaccard^rows: 8 rows per band at the defaults (32 hashes,
+    4 bands), 4 rows at ``prepare_corpus``'s 16 hashes in 4 bands. More
+    rows per band keep same-bucket groups tiny, so the self-join never
+    goes quadratic."""
     banded = lsh_band_rows_portable(
         df, text_col, id_col, num_hashes, bands, shingle_n, shingles
     )

@@ -10,7 +10,8 @@ makes every iteration reuse the same exchange. No driver-side adjacency
 structures; iteration count is a bounded driver loop over lazy plans
 (same pattern as :func:`..similarity.kmeans_fit`).
 
-Connected components (min-label propagation) lives in
+Connected components (a driver union-find for small edge lists,
+min-label propagation above that) lives in
 ``operators.dedup.dup_clusters``; this module holds the value-iteration
 family.
 """

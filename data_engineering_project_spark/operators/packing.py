@@ -4,16 +4,18 @@ The step between a filtered corpus and a training run: concatenate
 documents into sequences of at most ``max_tokens`` so the trainer sees
 dense batches instead of padding. Exact global bin packing is NP-hard
 and inherently serial; every production pipeline packs greedily within
-shards instead. That maps 1:1 onto Spark partitions:
+shards instead. That maps onto a Spark grouped map, one group per shard:
 
-1. hash-repartition documents by id into ``num_shards`` shards,
-2. sort within each shard (deterministic order, no global sort),
-3. greedy next-fit scan per shard via ``applyInPandas`` — documents
-   stream in sorted order into the current bin until the budget would
-   overflow, then a new bin opens.
+1. tag each document with its shard, ``pmod(xxhash64(id), num_shards)``,
+2. group by the shard tag — ``groupBy(...).applyInPandas`` plans the
+   one shuffle itself, and AQE coalesces its partitions, so a small
+   input runs a few Python tasks rather than one per shard,
+3. sort within each shard (deterministic order, no global sort), then
+   a greedy next-fit scan — documents stream in sorted order into the
+   current bin until the budget would overflow, then a new bin opens.
 
-Each shard packs independently — no shuffle beyond the initial
-repartition, no state across shards, linear time. Waste vs optimal is
+Each shard packs independently — one shuffle on the shard tag, no
+state across shards, linear time. Waste vs optimal is
 bounded (next-fit ≤ 2× bins of optimal; in practice a few % for
 doc ≪ budget) and the output is fully deterministic for a given
 (num_shards, budget): shard membership is a hash of the id and order
@@ -104,11 +106,7 @@ def pack_sequences(
         F.col(id_col).cast("long").alias("__id"),
         F.col(token_count_col).cast("long").alias("__tok"),
     ).withColumn("__shard", F.pmod(F.xxhash64("__id"), F.lit(num_shards)))
-    return (
-        prepared.repartition(num_shards, "__shard")
-        .groupBy("__shard")
-        .applyInPandas(pack_shard, PACK_SCHEMA)
-    )
+    return prepared.groupBy("__shard").applyInPandas(pack_shard, PACK_SCHEMA)
 
 
 def packing_efficiency(packs: DataFrame, max_tokens: int) -> DataFrame:

@@ -3,18 +3,29 @@ team actually runs, wired from this engine's operators:
 
     raw documents
       → PII redaction                  (operators/pii.py)
-      → exact dedup                    (operators/dedup.exact_dedup)
+      → exact dedup                    (operators/dedup.exact_dedup_groups)
       → near-dup removal (MinHash-LSH candidates → cluster keep-list)
       → quality + repetition filter    (functions/text.quality_score,
                                         operators/quality_rules)
       → deterministic train/val split  (operators/sampling.hash_split)
       → sequence packing of the train split (operators/packing)
 
-Every stage is lazy-on-lazy DataFrame composition: Catalyst sees ONE
-plan per output, so scan-side projections/filters fuse across stage
-boundaries (e.g. the quality filter prunes before the packer's
-shuffle). Per-stage row counts are collected from ONE pass each —
-the funnel report a pipeline owner reviews after every run.
+Each funnel boundary is materialized once, with ``localCheckpoint``,
+and its row counts are read through ``DataFrame.observe`` on that same
+action — no ``count()`` re-runs the lineage above a boundary:
+
+1. the exact-dedup groups (md5 hash → keeper id, copy count) give
+   ``raw`` (sum of copies) and ``after_exact_dedup`` (group count);
+2. the near-deduped rows, tagged with the quality flag and the split
+   column, give ``after_near_dedup``, ``after_quality``, ``train`` and
+   ``val``;
+3. the packed train split gives ``train_packs`` (``(shard, pack_id)``
+   is unique, so its row count is the pack count).
+
+The near-dup clustering between 1 and 2 collects its (small) edge list
+once; see :func:`~data_engineering_project_spark.operators.dedup.dup_clusters`.
+Within a boundary the stages are lazy-on-lazy composition, so Catalyst
+fuses the row-local ones.
 
 Scale: the only stateful stages are the dedup shuffles (hash/band
 keys, never text) and the packer's hash-sharded applyInPandas; all
@@ -27,7 +38,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from data_engineering_project_spark.functions.text import quality_score
@@ -43,6 +54,14 @@ class CorpusPrepResult:
     funnel: dict[str, int]
 
 
+def _observed(df: DataFrame, name: str, *metrics) -> tuple[DataFrame, dict]:
+    """Checkpoint ``df`` eagerly and return it with the ``metrics``
+    observed during that one action (nulls — sums over no rows — as 0)."""
+    obs = Observation(name)
+    ck = df.observe(obs, *metrics).localCheckpoint(eager=True)
+    return ck, {k: v or 0 for k, v in obs.get.items()}
+
+
 def prepare_corpus(
     docs: DataFrame,
     text_col: str = "text",
@@ -55,14 +74,19 @@ def prepare_corpus(
 ) -> CorpusPrepResult:
     """Run the full prep funnel; returns packed train, val, and the
     per-stage surviving-row counts."""
-    funnel: dict[str, int] = {"raw": docs.count()}
-
     # 1. PII scrub (row-local, no row drops)
     clean = docs.withColumn(text_col, pii.redact(F.col(text_col)))
 
-    # 2. exact dedup (md5 groups, keep min id)
-    exact = dedup.exact_dedup(clean, text_col, id_col)
-    funnel["after_exact_dedup"] = exact.count()
+    # 2. exact dedup (md5 groups, keep min id) — boundary 1
+    groups, m = _observed(
+        dedup.exact_dedup_groups(clean, text_col, id_col),
+        "corpus_exact",
+        F.sum("n_copies").alias("raw"),
+        F.count(F.lit(1)).alias("after_exact_dedup"),
+    )
+    funnel: dict[str, int] = dict(m)
+    keepers = groups.select(F.col(f"keeper_{id_col}").alias(id_col))
+    exact = clean.join(keepers, id_col, "left_semi")
 
     # 3. near-dup: LSH candidates -> connected clusters -> keep the
     #    min-id representative of every cluster
@@ -74,33 +98,42 @@ def prepare_corpus(
         F.col("doc_id") != F.col("cluster_id")
     ).select(F.col("doc_id").alias(id_col))
     neardeduped = anti_join(exact, drop, [id_col], broadcast_right=True)
-    funnel["after_near_dedup"] = neardeduped.count()
 
-    # 4. quality gate (C4/Gopher-style composite score)
-    quality = neardeduped.filter(
-        quality_score(text_col) >= F.lit(min_quality)
-    )
-    funnel["after_quality"] = quality.count()
-
-    # 5. deterministic split (md5 buckets — retry- and cluster-stable)
+    # 4. quality gate (C4/Gopher-style composite score) and 5.
+    #    deterministic split (md5 buckets — retry- and cluster-stable),
+    #    both as columns of one frame — boundary 2
+    ok = "__quality_ok"
     splits = {"val": val_fraction, "train": 1.0 - val_fraction}
-    tagged = hash_split(quality, id_col, splits)
-    train = tagged.filter(F.col("split") == "train")
-    val = tagged.filter(F.col("split") == "val")
-    funnel["train"] = train.count()
-    funnel["val"] = val.count()
+    flagged = neardeduped.withColumn(
+        ok, quality_score(text_col) >= F.lit(min_quality)
+    )
+    is_train = F.col(ok) & (F.col("split") == "train")
+    is_val = F.col(ok) & (F.col("split") == "val")
+    tagged, m = _observed(
+        hash_split(flagged, id_col, splits),
+        "corpus_split",
+        F.count(F.lit(1)).alias("after_near_dedup"),
+        F.count_if(F.col(ok)).alias("after_quality"),
+        F.count_if(is_train).alias("train"),
+        F.count_if(is_val).alias("val"),
+    )
+    funnel.update(m)
+    train = tagged.filter(is_train).drop(ok)
+    val = tagged.filter(is_val).drop(ok)
 
-    # 6. pack the train split into fixed token budgets
+    # 6. pack the train split into fixed token budgets — boundary 3
     with_len = train.withColumn(
         "n_tokens", F.size(F.split(F.col(text_col), " "))
     )
-    packed = packing.pack_sequences(
-        with_len,
-        id_col=id_col,
-        token_count_col="n_tokens",
-        max_tokens=pack_budget,
+    packed, m = _observed(
+        packing.pack_sequences(
+            with_len,
+            id_col=id_col,
+            token_count_col="n_tokens",
+            max_tokens=pack_budget,
+        ),
+        "corpus_packs",
+        F.count(F.lit(1)).alias("train_packs"),
     )
-    funnel["train_packs"] = (
-        packed.select("shard", "pack_id").distinct().count()
-    )
+    funnel.update(m)
     return CorpusPrepResult(train_packed=packed, val=val, funnel=funnel)

@@ -405,6 +405,76 @@ def test_dup_clusters_on_lsh_output(spark, sf_dir):
     for i in range(3):
         if i + 1_000_000 in clusters:
             assert clusters[i + 1_000_000] == clusters.get(i, i)
+    # the driver union-find and label propagation agree on real LSH output
+    assert clusters
+    assert clusters == {
+        r.doc_id: r.cluster_id for r in dedup._propagate_labels(verified, 20).collect()
+    }
+
+
+def _labels(frame):
+    return {r.doc_id: r.cluster_id for r in frame.collect()}
+
+
+def _random_pairs(spark, seed, n_nodes, n_edges):
+    rng = np.random.default_rng(seed)
+    a = rng.integers(0, n_nodes, n_edges)
+    b = rng.integers(0, n_nodes, n_edges)
+    edges = {(int(min(x, y)), int(max(x, y))) for x, y in zip(a, b) if x != y}
+    return spark.createDataFrame(sorted(edges), "id_a long, id_b long")
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_dup_clusters_union_find_matches_propagation(spark, seed):
+    """Sparse random graphs (many small components, some chains): the
+    driver union-find labels equal the label-propagation labels."""
+    pairs = _random_pairs(spark, seed, 120, 70).localCheckpoint(eager=True)
+    got = dedup.dup_clusters(pairs)
+    assert got.columns == ["doc_id", "cluster_id"]
+    assert got.schema["doc_id"].dataType.simpleString() == "bigint"
+    assert _labels(got) == _labels(dedup._propagate_labels(pairs, 40))
+
+
+def test_dup_clusters_routes_to_propagation_above_budget(spark, monkeypatch):
+    """Over MAX_DRIVER_EDGES the distributed path runs, with the same
+    answer; at or under it the union-find answers alone."""
+    pairs = _random_pairs(spark, 4, 60, 30).localCheckpoint(eager=True)
+    n_edges = pairs.count()
+    calls = []
+    real = dedup._propagate_labels
+
+    def spy(p, max_iter):
+        calls.append(max_iter)
+        return real(p, max_iter)
+
+    monkeypatch.setattr(dedup, "_propagate_labels", spy)
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", n_edges)
+    small = _labels(dedup.dup_clusters(pairs))
+    assert calls == []
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", n_edges - 1)
+    large = _labels(dedup.dup_clusters(pairs))
+    assert calls == [20]
+    assert large == small
+
+
+def test_dup_clusters_empty_pairs(spark):
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    got = dedup.dup_clusters(pairs)
+    assert got.collect() == []
+    assert got.columns == ["doc_id", "cluster_id"]
+
+
+def test_dup_clusters_unconverged_propagation_raises(spark, monkeypatch):
+    """A 30-node path needs more rounds than max_iter=20 allows: the
+    propagation path raises instead of returning labels in which a
+    far node keeps a non-minimum id; the union-find is exact."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(29)], "id_a long, id_b long"
+    ).localCheckpoint(eager=True)
+    assert set(_labels(dedup.dup_clusters(pairs)).values()) == {0}
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", 0)
+    with pytest.raises(ValueError, match=r"max_iter=20.*provisional components"):
+        dedup.dup_clusters(pairs)
 
 
 def test_winnow_planted_near_dupes_share_fingerprints(spark, sf_dir):

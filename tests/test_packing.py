@@ -142,3 +142,27 @@ def test_packs_identical_to_copying_reference(spark):
     want = _next_fit_reference(docs, 120)
     assert [(list(r.doc_ids), r.total_tokens, r.truncated) for r in got] == want
     assert [r.pack_id for r in got] == list(range(len(want)))
+
+
+def test_multi_shard_packs_are_next_fit_per_hash_shard(spark):
+    """Shard membership is ``pmod(xxhash64(id), num_shards)`` and each
+    shard is packed next-fit in id order, however Spark partitions the
+    grouped map: every shard's packs equal the reference loop's."""
+    docs = [(i * 7 + 3, (i * 53) % 110 + 1) for i in range(300)]
+    df = spark.createDataFrame(docs, "doc_id long, n_tok long").repartition(5)
+    shard_of = {
+        r.doc_id: r.shard
+        for r in df.select(
+            "doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("shard")
+        ).collect()
+    }
+    got = packing.pack_sequences(df, "doc_id", "n_tok", 100, num_shards=8).collect()
+    want = []
+    for shard in sorted(set(shard_of.values())):
+        member = [d for d in docs if shard_of[d[0]] == shard]
+        for pack_id, (ids, tok, trunc) in enumerate(_next_fit_reference(member, 100)):
+            want.append((shard, pack_id, ids, len(ids), tok, trunc))
+    assert sorted(
+        (r.shard, r.pack_id, list(r.doc_ids), r.n_docs, r.total_tokens, r.truncated)
+        for r in got
+    ) == sorted(want)
