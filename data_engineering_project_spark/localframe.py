@@ -13,12 +13,17 @@ every cell cast to its declared type, which the analyzer folds to a
 LocalRelation served entirely by the JVM. Doubles are rendered with
 ``repr`` and cast from string — the exact-round-trip convention used
 throughout the repo's literal expression builders — so values are
-bit-identical to what createDataFrame would have produced.
+bit-identical to what createDataFrame would have produced. Timestamps
+are rendered as their epoch microseconds, converted exactly as
+createDataFrame converts them (naive values read as local time).
 """
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import TimestampType
 
 
 def _split_ddl(ddl: str) -> list[tuple[str, str]]:
@@ -51,6 +56,8 @@ def _sql_literal(v, typ: str) -> str:
         return f"CAST(NULL AS {typ})"
     if isinstance(v, bool):
         return "true" if v else "false"
+    if isinstance(v, datetime) and t == "timestamp":
+        return f"timestamp_micros({TimestampType().toInternal(v)})"
     if isinstance(v, int):
         return f"CAST({v} AS {typ})"
     if isinstance(v, float):
@@ -77,15 +84,19 @@ def _sql_literal(v, typ: str) -> str:
 def local_rows(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A LocalRelation with the same schema and values as
     ``spark.createDataFrame(rows, ddl)`` — but JVM-only: no Python RDD,
-    no Python-worker stage on any action. ``rows`` is a non-empty list
-    of tuples of driver-side scalars (None/bool/int/float/str and
-    flat arrays thereof)."""
+    no Python-worker stage on any action. ``rows`` is a list of tuples
+    of driver-side scalars (None/bool/int/float/str, datetimes for
+    ``timestamp`` columns, and flat arrays thereof); an empty list gives
+    an empty frame of the declared schema."""
     fields = _split_ddl(ddl)
+    names = ",".join(name for name, _ in fields)
+    if not rows:
+        nulls = ",".join(_sql_literal(None, typ) for _, typ in fields)
+        return spark.sql(f"SELECT * FROM VALUES ({nulls}) AS t({names}) LIMIT 0")
     rendered = ",".join(
         "("
         + ",".join(_sql_literal(v, typ) for v, (_, typ) in zip(r, fields))
         + ")"
         for r in rows
     )
-    names = ",".join(name for name, _ in fields)
     return spark.sql(f"SELECT * FROM VALUES {rendered} AS t({names})")

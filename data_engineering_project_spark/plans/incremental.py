@@ -5,21 +5,31 @@
 Three layers of exactly-once, replicated faithfully:
 
 1. **File level** — content fingerprint per landing file; unchanged
-   files are skipped entirely (manifest + ledger, I1).
+   files are skipped entirely (manifest + ledger, I1). The landing
+   writer records each month's fingerprint in ``_manifest.json``, and
+   the bronze step reads it from there; only files the manifest does
+   not describe are fingerprinted again, all in one grouped aggregate.
 2. **Row level** — a *changed* file re-delivers old rows, so new orders
    are staged with an anti-join against bronze (J5) and items are
    scoped to the new orders (semi-join, J6) then anti-dupped on the
-   composite key (I2).
-3. **Ledger** — per-file upsert with rows_in/rows_inserted/status
-   (I4), making re-runs observable no-ops (I5).
+   composite key (I2). Items are appended before their orders, so a
+   crash between the two appends is repaired by the replay: the orders
+   are still new, and the items already appended are anti-dupped away.
+3. **Ledger** — one row per file with rows_in/rows_inserted/status
+   (I4), making re-runs observable no-ops (I5). A run collects every
+   file's row and upserts them in one ledger write at the end, which is
+   the run's commit point: a crash before it leaves bronze rows the
+   replay's anti-joins skip, so the replay inserts nothing twice.
 
 Scale notes: the fingerprint is computed distributed (count + min/max
 ts + an order-insensitive sum of per-row xxhash64 — commutative, so
 partitioning doesn't matter and nothing is collected but 4 scalars).
 The anti-join's right side is the bronze key projection only; the
 incoming batch (a month) is small relative to bronze, so Spark/AQE
-broadcasts the batch side. Nothing in this module iterates rows on the
-driver.
+broadcasts the batch side. The DQ gate's counts are observed on the
+batch while the new orders are staged, so they cost no extra pass.
+Nothing in this module iterates data rows on the driver; the ledger it
+merges there holds one row per file.
 """
 
 from __future__ import annotations
@@ -27,15 +37,14 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 from datetime import datetime, timezone
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from data_engineering_project_spark.operators.joins import anti_join, semi_join
-from data_engineering_project_spark.sources.control_table import (
-    LEDGER_SCHEMA,
-    ControlTable,
-)
+from data_engineering_project_spark.sources.control_table import ControlTable
 from data_engineering_project_spark.sources.manifest import (
     fingerprint_changed,
     load_manifest,
@@ -54,6 +63,37 @@ class IncrementalSpec:
     ts_col: str  # e.g. o_orderdate  (monthly split column)
 
 
+def _fingerprint_aggs(key_col: str, ts_col: str | None) -> list:
+    aggs = [
+        F.count("*").alias("n"),
+        # decimal(38,0) accumulator: order-insensitive like the long sum,
+        # but immune to ANSI-mode overflow (sum of n × ±2^63 fits easily).
+        F.sum(F.xxhash64(F.col(key_col).cast("string")).cast("decimal(38,0)")).alias("keyhash"),
+    ]
+    if ts_col:
+        aggs += [F.min(ts_col).alias("min_ts"), F.max(ts_col).alias("max_ts")]
+    return aggs
+
+
+def _fingerprint_str(row, ts_col: str | None) -> str:
+    parts = [str(row["n"]), str(row["keyhash"])]
+    if ts_col:
+        parts += [str(row["min_ts"]), str(row["max_ts"])]
+    return "|".join(parts)
+
+
+def _fingerprint(df: DataFrame, key_col: str, ts_col: str | None = None) -> tuple[str, int]:
+    """:func:`content_fingerprint` and the row count. The aggregate is
+    observed on one scan (per-task partials merged on the driver), so it
+    runs one job, where an ``agg().collect()`` runs two."""
+    obs = Observation("fingerprint")
+    df.observe(obs, *_fingerprint_aggs(key_col, ts_col)).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    got = obs.get
+    return _fingerprint_str(got, ts_col), got["n"]
+
+
 def content_fingerprint(df: DataFrame, key_col: str, ts_col: str | None = None) -> str:
     """Order-insensitive content fingerprint of a batch.
 
@@ -63,19 +103,29 @@ def content_fingerprint(df: DataFrame, key_col: str, ts_col: str | None = None) 
     and associative, so it is stable under any partitioning, and only
     four scalars reach the driver.
     """
-    aggs = [
-        F.count("*").alias("n"),
-        # decimal(38,0) accumulator: order-insensitive like the long sum,
-        # but immune to ANSI-mode overflow (sum of n × ±2^63 fits easily).
-        F.sum(F.xxhash64(F.col(key_col).cast("string")).cast("decimal(38,0)")).alias("keyhash"),
-    ]
-    if ts_col:
-        aggs += [F.min(ts_col).alias("min_ts"), F.max(ts_col).alias("max_ts")]
-    row = df.agg(*aggs).collect()[0]
-    parts = [str(row["n"]), str(row["keyhash"])]
-    if ts_col:
-        parts += [str(row["min_ts"]), str(row["max_ts"])]
-    return "|".join(parts)
+    return _fingerprint(df, key_col, ts_col)[0]
+
+
+def _fingerprints(
+    spark: SparkSession, landing_dir: str, names: list[str], key_col: str, ts_col: str
+) -> dict[str, str]:
+    """:func:`content_fingerprint` of each named landing file, in one
+    grouped aggregate over their union. Only the key and ts columns are
+    scanned, read with their types in the first file (one footer read in
+    all; a file whose types differ fails the scan)."""
+    first = spark.read.parquet(os.path.join(landing_dir, names[0])).schema
+    cols = StructType([first[key_col], first[ts_col]])
+    tagged = reduce(
+        DataFrame.unionByName,
+        (
+            spark.read.schema(cols).parquet(os.path.join(landing_dir, n)).withColumn("__file", F.lit(n))
+            for n in names
+        ),
+    )
+    rows = tagged.groupBy("__file").agg(*_fingerprint_aggs(key_col, ts_col)).collect()
+    got = {r["__file"]: _fingerprint_str(r, ts_col) for r in rows}
+    empty = _fingerprint_str({"n": 0, "keyhash": None, "min_ts": None, "max_ts": None}, ts_col)
+    return {n: got.get(n, empty) for n in names}
 
 
 def split_monthly(df: DataFrame, ts_col: str) -> DataFrame:
@@ -91,7 +141,11 @@ def land_monthly(
 
     Only months whose fingerprint moved are (re)written — the
     reference's write-if-changed (scripts/esplosione_dati.py:147-154).
-    Returns {period: rows_written}.
+    Their manifest entries are dropped and the manifest saved before any
+    file is overwritten, and the new fingerprints are recorded after the
+    writes, so an entry never describes a file it was not computed from
+    (a crash in between leaves the month to be fingerprinted from its
+    file). Returns {period: rows_written}.
     """
     manifest_path = os.path.join(landing_dir, "_manifest.json")
     manifest = load_manifest(manifest_path)
@@ -100,21 +154,23 @@ def land_monthly(
         # One distributed pass for all per-month fingerprints.
         stats = (
             tagged.groupBy("order_month")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.xxhash64(F.col(key_col).cast("string")).cast("decimal(38,0)")).alias("keyhash"),
-                F.min(ts_col).alias("min_ts"),
-                F.max(ts_col).alias("max_ts"),
-            )
+            .agg(*_fingerprint_aggs(key_col, ts_col))
             .collect()
         )
-        written: dict[str, int] = {}
+        changed = []
         for row in stats:
+            fname = f"orders_{row['order_month']}.parquet"
+            fp = _fingerprint_str(row, ts_col)
+            if fingerprint_changed(manifest, fname, fp):
+                changed.append((row, fname, fp))
+        if changed:
+            os.makedirs(landing_dir, exist_ok=True)
+            for _, fname, _ in changed:
+                manifest["files"].pop(fname, None)
+            save_manifest(manifest_path, manifest)
+        written: dict[str, int] = {}
+        for row, fname, fp in changed:
             period = row["order_month"]
-            fp = f"{row['n']}|{row['keyhash']}|{row['min_ts']}|{row['max_ts']}"
-            fname = f"orders_{period}.parquet"
-            if not fingerprint_changed(manifest, fname, fp):
-                continue
             (
                 tagged.filter(F.col("order_month") == period)
                 .drop("order_month")
@@ -157,17 +213,17 @@ def merge_aggregate(
     )
 
 
-def dq_check(df: DataFrame, key_cols: list[str], non_negative: list[str]) -> dict[str, int]:
-    """The incremental DQ gate (scripts/bronze_incremental.py:68-106):
-    non-empty batch, no null keys, no negative measures. One aggregate
-    pass; raises on violation (fail-fast, I5)."""
+def _dq_aggs(key_cols: list[str], non_negative: list[str]) -> list:
     aggs = [F.count("*").alias("rows_in")]
     for c in key_cols:
         aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).cast("long").alias(f"null_{c}"))
     for c in non_negative:
         aggs.append(F.sum(F.when(F.col(c) < 0, 1).otherwise(0)).cast("long").alias(f"neg_{c}"))
-    row = df.agg(*aggs).collect()[0].asDict()
-    if row["rows_in"] == 0:
+    return aggs
+
+
+def _dq_raise(row: dict) -> dict:
+    if not row["rows_in"]:
         raise ValueError("DQ: empty batch")
     violations = {k: v for k, v in row.items() if k != "rows_in" and v}
     if violations:
@@ -175,28 +231,40 @@ def dq_check(df: DataFrame, key_cols: list[str], non_negative: list[str]) -> dic
     return row
 
 
-def append_new_orders(
-    spark: SparkSession, bronze_orders_dir: str, incoming: DataFrame, spec: IncrementalSpec
-) -> tuple[DataFrame, int]:
-    """Row-level exactly-once append of orders (I2/J5):
-    NOT EXISTS staging → append (scripts/bronze_incremental.py:274-289).
-    Returns the staged new orders (they scope the items append) and
-    their count."""
+def dq_check(df: DataFrame, key_cols: list[str], non_negative: list[str]) -> dict[str, int]:
+    """The incremental DQ gate (scripts/bronze_incremental.py:68-106):
+    non-empty batch, no null keys, no negative measures. One aggregate
+    pass; raises on violation (fail-fast, I5)."""
+    return _dq_raise(df.agg(*_dq_aggs(key_cols, non_negative)).collect()[0].asDict())
+
+
+def _keys_of(spark: SparkSession, table_dir: str, like: DataFrame, keys: list[str]) -> DataFrame:
+    """The key columns of a bronze table, read with their types in
+    ``like`` (the batch appended to it) instead of a footer read."""
+    return spark.read.schema(StructType([like.schema[k] for k in keys])).parquet(table_dir)
+
+
+def stage_new_orders(
+    spark: SparkSession, bronze_orders_dir: str, batch: DataFrame, spec: IncrementalSpec
+) -> tuple[DataFrame, dict[str, int]]:
+    """Stage the batch's orders that bronze lacks (I2/J5, NOT EXISTS
+    staging, scripts/bronze_incremental.py:274-289) and run the DQ gate
+    on the batch. Returns the staged orders (they scope the items
+    append) and {rows_in, orders}; raises before anything is appended.
+
+    Staging is the reference's TEMP TABLE (S10): appending to bronze
+    refreshes any plan that scans it, so the anti-join is materialized
+    with its lineage cut before the orders are appended — a cache() is
+    NOT enough (the path refresh invalidates it too). The DQ counts and
+    the staged count are observed during that one checkpoint."""
+    dq, new = Observation("dq"), Observation("new_orders")
+    fresh = batch.observe(dq, *_dq_aggs([spec.order_key], []))
     if os.path.exists(bronze_orders_dir):
-        existing_keys = spark.read.parquet(bronze_orders_dir).select(spec.order_key)
-        fresh = anti_join(incoming, existing_keys, [spec.order_key])
-    else:
-        fresh = incoming
-    # Stage before writing (the reference's TEMP TABLE, S10): appending to
-    # bronze refreshes any plan that scans it, so the anti-join must be
-    # materialized with its lineage cut first or it would re-evaluate
-    # against its own output and vanish — a cache() is NOT enough (the
-    # path refresh invalidates it too).
-    fresh = fresh.localCheckpoint(eager=True)
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(bronze_orders_dir)
-    return fresh, n
+        existing = _keys_of(spark, bronze_orders_dir, batch, [spec.order_key])
+        fresh = anti_join(fresh, existing, [spec.order_key])
+    fresh = fresh.observe(new, F.count("*").alias("orders")).localCheckpoint(eager=True)
+    stats = _dq_raise({k: v or 0 for k, v in dq.get.items()})
+    return fresh, {"rows_in": stats["rows_in"], "orders": new.get["orders"]}
 
 
 def append_new_items(
@@ -206,22 +274,28 @@ def append_new_items(
     new_orders: DataFrame,
     spec: IncrementalSpec,
 ) -> int:
-    """Items scoped to newly inserted orders (J6 semi-join,
+    """Items scoped to the staged new orders (J6 semi-join,
     scripts/bronze_incremental.py:304-307), anti-dupped on the
-    composite (order, line) key (:308-313), then appended."""
+    composite (order, line) key (:308-313), then appended; the count is
+    observed on the append itself. The append reads bronze items once,
+    at planning, so it needs no staging."""
     scope_keys = new_orders.select(F.col(spec.order_key).alias(spec.item_order_key))
     scoped = semi_join(incoming_items, scope_keys, [spec.item_order_key], broadcast_right=True)
     if os.path.exists(bronze_items_dir):
-        existing = spark.read.parquet(bronze_items_dir).select(
-            spec.item_order_key, spec.item_line_key
-        )
-        scoped = anti_join(scoped, existing, [spec.item_order_key, spec.item_line_key])
-    # Stage (TEMP TABLE equivalent, S10) before the self-referential append.
-    scoped = scoped.localCheckpoint(eager=True)
-    n = scoped.count()
-    if n:
-        scoped.write.mode("append").parquet(bronze_items_dir)
-    return n
+        keys = [spec.item_order_key, spec.item_line_key]
+        scoped = anti_join(scoped, _keys_of(spark, bronze_items_dir, incoming_items, keys), keys)
+    obs = Observation("new_items")
+    scoped.observe(obs, F.count("*").alias("items")).write.mode("append").parquet(
+        bronze_items_dir
+    )
+    return obs.get["items"]
+
+
+def _ledger_row(
+    file_name: str, fingerprint: str, rows_in: int, rows_inserted: int, status: str, note: str
+) -> tuple:
+    now = datetime.now(timezone.utc).replace(tzinfo=None)
+    return (file_name, fingerprint, now, rows_in, rows_inserted, status, note)
 
 
 def replace_dimension(
@@ -233,42 +307,15 @@ def replace_dimension(
     file_name: str,
 ) -> bool:
     """Dimension full-refresh-on-change (I3,
-    scripts/bronze_incremental.py:199-219). Returns True if replaced."""
-    fp = content_fingerprint(incoming, key_col)
+    scripts/bronze_incremental.py:199-219). Returns True if replaced.
+    The row count logged is the fingerprint's own."""
+    fp, rows = _fingerprint(incoming, key_col)
     if (file_name, fp) in ledger.processed_ok():
-        _log_ledger(spark, ledger, file_name, fp, 0, 0, "SKIP", "SKIP: unchanged")
+        ledger.upsert_rows([_ledger_row(file_name, fp, 0, 0, "SKIP", "SKIP: unchanged")])
         return False
-    rows = incoming.count()
     incoming.write.mode("overwrite").parquet(bronze_dir)
-    _log_ledger(spark, ledger, file_name, fp, rows, rows, "OK", "replaced")
+    ledger.upsert_rows([_ledger_row(file_name, fp, rows, rows, "OK", "replaced")])
     return True
-
-
-def _log_ledger(
-    spark: SparkSession,
-    ledger: ControlTable,
-    file_name: str,
-    fingerprint: str,
-    rows_in: int,
-    rows_inserted: int,
-    status: str,
-    note: str,
-) -> None:
-    record = spark.createDataFrame(
-        [
-            (
-                file_name,
-                fingerprint,
-                datetime.now(timezone.utc).replace(tzinfo=None),
-                rows_in,
-                rows_inserted,
-                status,
-                note,
-            )
-        ],
-        LEDGER_SCHEMA,
-    )
-    ledger.upsert(record)
 
 
 def run_incremental(
@@ -282,40 +329,58 @@ def run_incremental(
     (scripts/bronze_incremental.py:181-357).
 
     For each landed month file: skip if (file, fingerprint) already in
-    the ledger (file-level exactly-once) → DQ gate → anti-dup append of
-    orders → semi-scoped anti-dupped append of their items → ledger
-    upsert. Idempotent: a second run over the same landing zone inserts
-    0 rows and logs SKIP.
+    the ledger (file-level exactly-once) → stage the new orders with the
+    DQ gate → append their anti-dupped items → append the orders. The
+    fingerprints come from the landing manifest; files it does not
+    describe are fingerprinted in one grouped aggregate. Every file's
+    ledger row is upserted in one write at the end (also when a month
+    raises, for the files before it). Idempotent: a second run over the
+    same landing zone inserts 0 rows and logs SKIP.
     """
     ledger = ControlTable(spark, os.path.join(bronze_dir, "tech_processed_files"))
     done = ledger.processed_ok()
     orders_dir = os.path.join(bronze_dir, "orders")
     items_dir = os.path.join(bronze_dir, "order_items")
-    results: dict[str, dict[str, int]] = {}
 
     month_files = sorted(
         f for f in os.listdir(landing_dir)
         if f.startswith("orders_") and f.endswith(".parquet")
     )
-    for fname in month_files:
-        batch = spark.read.parquet(os.path.join(landing_dir, fname))
-        fp = content_fingerprint(batch, spec.order_key, spec.ts_col)
-        if (fname, fp) in done:
-            _log_ledger(spark, ledger, fname, fp, 0, 0, "SKIP", "SKIP: unchanged")
-            results[fname] = {"rows_in": 0, "orders_inserted": 0, "items_inserted": 0}
-            continue
-        stats = dq_check(batch, [spec.order_key], [])
-        fresh, n_orders = append_new_orders(spark, orders_dir, batch, spec)
-        n_items = append_new_items(spark, items_dir, items_source, fresh, spec)
-        _log_ledger(
-            spark, ledger, fname, fp, stats["rows_in"], n_orders, "OK",
-            f"orders+{n_orders} items+{n_items}",
-        )
-        results[fname] = {
-            "rows_in": stats["rows_in"],
-            "orders_inserted": n_orders,
-            "items_inserted": n_items,
-        }
+    landed = load_manifest(os.path.join(landing_dir, "_manifest.json"))["files"]
+    fps = {f: landed[f]["fingerprint"] for f in month_files if f in landed}
+    missing = [f for f in month_files if f not in fps]
+    if missing:
+        fps.update(_fingerprints(spark, landing_dir, missing, spec.order_key, spec.ts_col))
+
+    results: dict[str, dict[str, int]] = {}
+    ledger_rows: list[tuple] = []
+    try:
+        for fname in month_files:
+            fp = fps[fname]
+            if (fname, fp) in done:
+                ledger_rows.append(_ledger_row(fname, fp, 0, 0, "SKIP", "SKIP: unchanged"))
+                results[fname] = {"rows_in": 0, "orders_inserted": 0, "items_inserted": 0}
+                continue
+            batch = spark.read.parquet(os.path.join(landing_dir, fname))
+            fresh, stats = stage_new_orders(spark, orders_dir, batch, spec)
+            n_orders = stats["orders"]
+            n_items = 0
+            if n_orders:
+                n_items = append_new_items(spark, items_dir, items_source, fresh, spec)
+                fresh.write.mode("append").parquet(orders_dir)
+            ledger_rows.append(
+                _ledger_row(
+                    fname, fp, stats["rows_in"], n_orders, "OK",
+                    f"orders+{n_orders} items+{n_items}",
+                )
+            )
+            results[fname] = {
+                "rows_in": stats["rows_in"],
+                "orders_inserted": n_orders,
+                "items_inserted": n_items,
+            }
+    finally:
+        ledger.upsert_rows(ledger_rows)
     return results
 
 
